@@ -79,19 +79,27 @@ object Tables {
     * keying schemes silently drift apart).
     */
   def fixtureRoot(spark: SparkSession, sfDir: String, name: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
+    val sid = org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)
+    s"/tmp/graft_fixtures/$name/$sid/${corpusDigest(sfDir)}"
+  }
+
+  /** A temp-view name unique to one corpus, for a memo build that
+    * reads its input through SQL: two concurrent builds over different
+    * corpora in one session register different names, so neither can
+    * rebind the other's input between registration and analysis. */
+  def corpusView(name: String, sfDir: String): String =
+    s"${name}_${corpusDigest(sfDir).take(16)}"
+
+  private def corpusDigest(sfDir: String): String =
+    java.security.MessageDigest.getInstance("MD5")
       .digest(sfDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString
-    val sid = org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)
-    s"/tmp/graft_fixtures/$name/$sid/$digest"
-  }
 
   /** Drop every on-disk fixture this session wrote under
     * [[fixtureRoot]] (join_bucketed, scan_partitioned,
-    * scan_schema_evolution, …) plus the catalog entries the bucketed
-    * fixture registered — the teardown hook a long-lived service
-    * calls, mirroring `LlmOps.evictIvfCache` /
-    * `LayoutOps.evictCompactScratch` (ADVICE r10/r11: the fixture
+    * scan_schema_evolution, the IVF maintenance dirs, …) plus the
+    * catalog entries the bucketed fixture registered — the disk half
+    * of [[Memo.evict]], which calls it (ADVICE r10/r11: the fixture
     * family was the one scratch class with no eviction path; fixture
     * ops re-check the path on next use, so evict-then-reuse heals by
     * rewriting).

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Op, OpModule, Tables}
+import graft.{Memo, Op, OpModule, Tables}
 import graft.functions.SeededFnvHash
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -818,10 +818,10 @@ object LlmOps extends OpModule {
   // likewise rebuilt their per-doc fingerprint / per-vector
   // projection relations. These are exactly the structures a
   // production dedup/ANN pipeline maintains INCREMENTALLY as a
-  // signature index (the ivfCache / tokCache analogue), so they are
-  // session-memoized per (session, corpus) with the established
-  // discipline: key-scoped lock, persist + count() to materialize,
-  // cold pass discloses the build (Bench pass 1 pays it), evictable.
+  // signature index (the IVF index / tokenized-corpus analogue), so
+  // they are session memos ([[graft.Memo]]) keyed (session, corpus):
+  // the cold pass discloses the build (Bench pass 1 pays it), warm
+  // runs scan the persisted relation.
   // The DuckDB oracle SQL is UNCHANGED and self-contained — the
   // driver's hash gate re-proves the restructured Spark side against
   // the identical oracle relation, and LlmSpec pins restructured ≡
@@ -832,45 +832,6 @@ object LlmOps extends OpModule {
   // per-query work left is banding projections plus the candidate and
   // confirm equi-joins, which is the marginal cost an incremental
   // signature index gives a production pipeline on every batch.
-  private val md5TwinCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  /** Evict this session's memoized twin signature relations —
-    * companion to [[evictTokCache]] / [[evictIvfCache]]. */
-  def evictMd5TwinCache(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix =
-      s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|md5t|"
-    md5TwinCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      md5TwinCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-  }
-
-  /** The memo core: build → inline CTEs → persist → materialize,
-    * once per (session, corpus, tag); returns the persisted frame for
-    * DataFrame-API consumers. */
-  private def md5TwinMemoDf(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, tag: String)(build: => DataFrame): DataFrame = {
-    val key = s"${org.apache.spark.sql.graftbridge.Bridge
-      .sessionUUID(spark)}|md5t|$tag|$sfDir"
-    key.intern.synchronized(md5TwinCache.getOrElseUpdate(key, {
-      // r22: persist + register the CTE-INLINED form. A `WITH`-clause
-      // build stores a WithCTE plan in the temp view, and CTE def ids
-      // renumber relative to each consumer during normalization, so
-      // CacheManager's fragment walk never matches the embedded view
-      // against the standalone cache key — the memo silently misses
-      // (exactly the r21 simhash/lsh defect: warm ≈ cold, no
-      // InMemoryRelation in the plan). The near/incr builds worked
-      // only because they happened to be CTE-free.
-      val b = org.apache.spark.sql.graftbridge.Bridge.inlineCtes(build)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      b.count()
-      b
-    }))
-  }
-
-  private def md5TwinMemo(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, tag: String, view: String)(build: => DataFrame): Unit =
-    md5TwinMemoDf(spark, sfDir, tag)(build).createOrReplaceTempView(view)
 
   // shared fragments for the restructured Spark sides — same
   // constants/arithmetic as the monolithic builders above (drift is
@@ -924,7 +885,7 @@ object LlmOps extends OpModule {
       sfDir: String): Unit = {
     Tables.documents(spark, sfDir).select("doc_id", "text")
       .createOrReplaceTempView("graft_md5twin_docs")
-    md5TwinMemo(spark, sfDir, "sh", "graft_md5sh_base") {
+    Memo.relation(spark, "md5sh", sfDir) {
       spark.sql(s"""
         SELECT /*+ REPARTITION(doc_id) */ src, doc_id,
           xxhash64(sh) AS xx, ${md5X32("md5(sh)")} AS x
@@ -939,13 +900,13 @@ object LlmOps extends OpModule {
                         UNION ALL
                         SELECT 1 AS src, doc_id, $SparkCloneText AS text
                           FROM graft_md5twin_docs) r) t) s0) s1""")
-    }
-    md5TwinMemo(spark, sfDir, "sig", "graft_md5sig_base") {
+    }.createOrReplaceTempView("graft_md5sh_base")
+    Memo.relation(spark, "md5sig", sfDir) {
       spark.sql(s"""
         SELECT /*+ REPARTITION(doc_id) */ src, doc_id, $minhashMinCols,
           count(*) AS n_sh
         FROM graft_md5sh_base GROUP BY src, doc_id""")
-    }
+    }.createOrReplaceTempView("graft_md5sig_base")
   }
 
   /** Restructured Spark side of `llm_dedup_near_md5` over the
@@ -1510,13 +1471,13 @@ object LlmOps extends OpModule {
       col("fp"))
   }
 
-  /** r22: the memoized corpus winnow index ([[md5TwinMemoDf]]
-    * discipline) — shared by `llm_winnow_pairs` per call and by both
-    * boilerplate-rank cold builds, which previously each re-ran the
+  /** r22: the memoized corpus winnow index ([[graft.Memo]]) — shared
+    * by `llm_winnow_pairs` per call and by both boilerplate-rank cold
+    * builds, which previously each re-ran the
     * kernel + fp exchange over the full corpus. */
   private def winnowPostings(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    md5TwinMemoDf(s, d, "wfp")(winnowPostingsOf(Tables.documents(s, d)))
+    Memo.relation(s, "wfp", d)(winnowPostingsOf(Tables.documents(s, d)))
 
   private def winnowPairsFrom(f: DataFrame): DataFrame =
     f.groupBy("fp")
@@ -1551,18 +1512,6 @@ object LlmOps extends OpModule {
     * |edges|-bounded per round — both layers' own 100 TB stories
     * compose unchanged.
     */
-  private val wrankCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  /** Evict this session's memoized boilerplate-rank tables. */
-  def evictWrankCache(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix =
-      s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|wrank|"
-    wrankCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      wrankCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-  }
-
   /** Shared SQL for `llm_boilerplate_rank_fixed` — the hash-gated
     * twin of [[boilerplateRank]], composing TWO already-proven
     * disciplines: the winnow-pair edge layer is portable md5
@@ -1642,7 +1591,7 @@ object LlmOps extends OpModule {
   private[graft] def boilerplateRank(docs: DataFrame,
       minShared: Long = 2L, iters: Int = 5,
       cacheKey: Option[String] = None): DataFrame = {
-    def build(): DataFrame = {
+    def build(): (DataFrame, Seq[DataFrame]) = {
       val e = winnowPairsOf(docs).filter(col("n_shared") >= minShared)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val edges = e.unionByName(
@@ -1650,22 +1599,19 @@ object LlmOps extends OpModule {
       val deg = edges.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("degree"))
       val (ranks, handle) = GraphOps.pageRankWithHandle(edges, iters = iters)
-      // the prCache discipline: persist OUR flat copy, then free the
-      // loop's final round so no unreachable cache entry outlives it
-      val out = ranks.join(deg, "node")
+      (ranks.join(deg, "node")
         .select(col("node").as("doc_id"), col("degree"),
-          round(col("pr"), 6).as("pr"))
-        .persist()
-      out.count()
-      handle.unpersist(blocking = false)
-      out
+          round(col("pr"), 6).as("pr")),
+       Seq(handle))
     }
     cacheKey match {
+      // the memo persists its own flat copy, then frees the loop's
+      // final round so no unreachable cache entry outlives it
       case Some(k) =>
-        val key =
-          s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(docs.sparkSession)}|wrank|$k"
-        key.intern.synchronized(wrankCache.getOrElseUpdate(key, build()))
-      case None => build()
+        Memo.iterative(docs.sparkSession, s"wrank|s$minShared|i$iters", k)(build())
+      // lazy result: the caller reads through the final round's
+      // blocks, so the handle stays alive
+      case None => build()._1
     }
   }
 
@@ -1724,17 +1670,11 @@ object LlmOps extends OpModule {
     // assignment is the in-session stand-in for re-writing the
     // cid-partitioned corpus table with the split ids.
     val refined = cacheKey match {
-      case Some(k) =>
-        val key =
-          s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(emb.sparkSession)}|ssplit|$k|m$maxClusterSize"
-        key.intern.synchronized(semSplitCache.getOrElseUpdate(key, {
-          val df = subSplitAssign(idx.assign, maxClusterSize)
-          // no-op result IS the ivf cache's persisted relation —
-          // persisting it again would double the block-manager
-          // footprint for identical bits
-          if (df eq idx.assign) df
-          else { val p = df.persist(); p.count(); p }
-        }))
+      // a no-op split returns the IVF entry's persisted assignment
+      // itself, which the memo stores as it is rather than persisting
+      // identical bits a second time
+      case Some(k) => Memo.relation(emb.sparkSession, s"ssplit|m$maxClusterSize", k)(
+        subSplitAssign(idx.assign, maxClusterSize))
       case None => subSplitAssign(idx.assign, maxClusterSize)
     }
     // norms once per vector; the pairwise hot loop is one codegen dot
@@ -1752,20 +1692,6 @@ object LlmOps extends OpModule {
     idx.assign.select(col("vec_id"))
       .join(dropped.withColumn("hit", lit(true)), Seq("vec_id"), "left")
       .select(col("vec_id"), coalesce(col("hit"), lit(false)).as("is_dup"))
-  }
-
-  /** Session cache for [[semDedup]]'s sub-split assignments — keyed
-    * (sessionUUID, corpus key, cap) like [[ivfCache]]. */
-  private val semSplitCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  /** Evict this session's cached sub-split assignments. */
-  def evictSemSplitCache(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix =
-      s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|ssplit|"
-    semSplitCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      semSplitCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
   }
 
   /** Oversized-cluster sub-split — the skew/size guard for cluster-
@@ -2209,13 +2135,9 @@ object LlmOps extends OpModule {
     * `assign` as a cid-partitioned table.
     */
   private[graft] case class IvfIdx(cids: Seq[Long], cents: Seq[Seq[Double]],
-      alphaMax: Seq[Double], assign: DataFrame)
-
-  private val ivfCache =
-    scala.collection.concurrent.TrieMap[String, IvfIdx]()
-
-  private val tokCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
+      alphaMax: Seq[Double], assign: DataFrame) extends Memo.HoldsRelations {
+    def relations: Seq[DataFrame] = Seq(assign)
+  }
 
   /** Session-memoized tokenized corpus — ONE row per document:
     * (doc_id, lang, toks ARRAY<STRING>), where toks is the shared
@@ -2223,8 +2145,7 @@ object LlmOps extends OpModule {
     * (llm_tfidf, llm_bm25, llm_bigram_lm, llm_cooccur_lift,
     * llm_ngrams_tf) previously each re-ran scan → regexp-normalize →
     * split over the whole corpus; they now all read this one persisted
-    * relation (the ccCache pattern: key-scoped lock, count() to
-    * materialize, evictable via [[evictTokCache]]).
+    * relation (a [[graft.Memo]] entry keyed (session, corpus)).
     *
     * Shape notes for 100 TB: the compact array form is deliberately
     * the DOC-grain relation, not exploded (doc_id, term) rows — no
@@ -2238,59 +2159,9 @@ object LlmOps extends OpModule {
     */
   private[ops] def tokenizedDocs(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): DataFrame = {
-    val key =
-      s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|tok|$sfDir"
-    // namespaced key ("|tok|") — interned-string locks collide across
-    // memos when two caches build the same key text (the prCache /
-    // rotCache ADVICE r10 collision)
-    key.intern.synchronized(tokCache.getOrElseUpdate(key, {
-      val df = Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("lang"), tokens(col("text")).as("toks"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }))
+    Memo.relation(spark, "tok", sfDir)(Tables.documents(spark, sfDir)
+      .select(col("doc_id"), col("lang"), tokens(col("text")).as("toks")))
   }
-
-  /** Evict this session's memoized tokenized corpus — companion to
-    * [[evictIvfCache]] / [[PipelineOps.evictCcCache]]. */
-  def evictTokCache(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix =
-      s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|tok|"
-    tokCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      tokCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-  }
-
-  /** Memoized ON-DISK base-index dirs for the registered maintenance
-    * cycle, keyed (sessionUUID, corpus): the production analogue is an
-    * index built once and append-maintained thereafter, so only the
-    * first run pays the build; later runs hardlink-clone the files.
-    *
-    * ConcurrentHashMap (not TrieMap.getOrElseUpdate, whose builder can
-    * run twice under concurrent first runs — the loser's dir would
-    * never be stored, so eviction could never delete it). The build
-    * itself runs under a PER-KEY lock object, NOT inside
-    * `computeIfAbsent`'s mapping function: the mapping computation
-    * holds the map's bin lock, and a corpus-scale Spark build in there
-    * would stall any unrelated key that hashes to the same bin for
-    * minutes. Exactly one builder per key still holds (double-checked
-    * get under the key lock), every stored dir is evictable, and a
-    * failed build deletes its own dir before rethrowing.
-    */
-  private val ivfBaseDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Per-baseKey build locks for [[ivfBaseDirCache]] — tiny objects,
-    * created via computeIfAbsent (a short mapping, safe in-map). */
-  private val ivfBaseDirLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Per-run maintenance-cycle scratch dirs (`sessionPrefix|run=dir`),
-    * deleted on [[evictIvfCache]]: each run's grown clone is left on
-    * disk only until the session tears down. */
-  private val ivfRunDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Recursively clone `src` into `dst` with hardlinks (same
     * filesystem — both are tmp scratch), falling back to a byte copy
@@ -2341,21 +2212,7 @@ object LlmOps extends OpModule {
     }
     cacheKey match {
       case Some(k) =>
-        // keyed on sessionUUID (ADVICE r4): collision-free, unlike
-        // identityHashCode, and never aliases another live session's
-        // cached assignment
-        val key = s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(emb.sparkSession)}|$k|c$nCentroids"
-        val hit = ivfCache.contains(key)
-        val idx = ivfCache.getOrElseUpdate(key, build(persist = true))
-        // stderr, not stdout (Bench's stdout is one parsed JSON line):
-        // the same memo discipline as the ivf_append base-index line —
-        // a bench capture can tell "memo missed → this run paid the
-        // centroid train + assignment" from "box slow" (VERDICT r16 #6:
-        // llm_simsearch's r15 warm-inversion cost a verdict cycle to
-        // exactly this question)
-        Console.err.println(s"graft: ivf index memo " +
-          s"${if (hit) "HIT" else "MISS (built this run)"} key=$k|c$nCentroids")
-        idx
+        Memo.value(emb.sparkSession, s"ivf|c$nCentroids", k)(build(persist = true))
       case None => build(persist = false)
     }
   }
@@ -2463,39 +2320,6 @@ object LlmOps extends OpModule {
       val nNew = st.map(_.getLong(2)).sum
       if (nNew == 0) 0.0 else st.map(_.getLong(3)).sum.toDouble / nNew
     } finally batch.unpersist(blocking = false)
-  }
-
-  /** Evict and unpersist every cached IVF index for `spark` — the
-    * teardown hook for a long-lived service embedding this library. */
-  def evictIvfCache(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix = s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|"
-    ivfCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      ivfCache.remove(k).foreach(_.assign.unpersist(blocking = false))
-    }
-    // best-effort scratch cleanup; clones hold their own hardlinks so
-    // deleting the base never invalidates an in-flight run
-    def rmTree(d: String): Unit = {
-      val root = java.nio.file.Paths.get(d)
-      if (java.nio.file.Files.exists(root)) {
-        val it = java.nio.file.Files.walk(root)
-        try it.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach { p => java.nio.file.Files.deleteIfExists(p); () }
-        finally it.close()
-      }
-    }
-    val bases = ivfBaseDirCache.keySet().iterator()
-    while (bases.hasNext) {
-      val k = bases.next()
-      if (k.startsWith(prefix)) Option(ivfBaseDirCache.remove(k)).foreach(rmTree)
-    }
-    val runs = ivfRunDirs.iterator()
-    while (runs.hasNext) {
-      val entry = runs.next()
-      if (entry.startsWith(prefix)) {
-        runs.remove()
-        rmTree(entry.substring(entry.indexOf("|run=") + 5))
-      }
-    }
   }
 
   /** Rank ALL centroids per probe by angle: one [[CosCentroids]]
@@ -2726,19 +2550,21 @@ object LlmOps extends OpModule {
     // widening this materialization point AND the candidate-join
     // exchanges below once the corpus outgrows the session default.
     val sized = Scale.sizedShuffle(docs)
-    // r22: with a cacheKey the shingle-set relation follows the
-    // session memo discipline (it is the PPJoin inverted-index base a
+    // r22: with a cacheKey the shingle-set relation is a session memo
+    // ([[graft.Memo]]; it is the PPJoin inverted-index base a
     // production dedup service maintains per corpus snapshot) — the
     // per-call work becomes postings + candidate join + exact
     // confirm; without one (tests, ad-hoc inputs) the r12
-    // exchange-reuse form is unchanged.
+    // exchange-reuse form is unchanged. The memo tag names the build
+    // over THIS docs input: a caller with a different input (another
+    // clone planting) must pass its own cacheKey (Memo's key contract).
     def sortedBuild = Scale.repartitionSized(sized,
       shingleSets(docs, shingleN)
         .filter(col("doc_id").isNotNull && col("sh").isNotNull &&
           size(col("sh")) > 0), col("doc_id"))
     val sorted = cacheKey match {
       case Some(k) =>
-        md5TwinMemoDf(docs.sparkSession, k, s"jacsh$shingleN")(sortedBuild)
+        Memo.relation(docs.sparkSession, s"jacsh$shingleN", k)(sortedBuild)
       case None => sortedBuild
     }
     // Prefix postings as posexplode + pos-filter (not explode(slice)):
@@ -2849,7 +2675,7 @@ object LlmOps extends OpModule {
           size(col("sh")) > 0), col("doc_id"))
     val sorted = cacheKey match {
       case Some(k) =>
-        md5TwinMemoDf(docs.sparkSession, k, s"contsh$shingleN")(sortedBuild)
+        Memo.relation(docs.sparkSession, s"contsh$shingleN", k)(sortedBuild)
       case None => sortedBuild
     }
     // BOTH candidate sides derive from ONE posexploded posting
@@ -2894,8 +2720,8 @@ object LlmOps extends OpModule {
     // dominant recurring cost); its window exchange leaves the cached
     // relation hash-partitioned on h, which the candidate join adopts.
     val full = cacheKey match {
-      case Some(k) => md5TwinMemoDf(docs.sparkSession, k,
-        s"contfull${shingleN}_${maxPostingDf.getOrElse(0L)}")(fullBuild)
+      case Some(k) => Memo.relation(docs.sparkSession,
+        s"contfull${shingleN}_${maxPostingDf.getOrElse(0L)}", k)(fullBuild)
       case None => fullBuild
     }
     // one-sided length filter (asymmetric PPJoin+ form):
@@ -3656,14 +3482,15 @@ object LlmOps extends OpModule {
       // r21: the fingerprint relation (md5 per token occurrence + 64
       // vote sums — the dominant cost) is the signature index a
       // production SimHash dedup maintains incrementally; it is
-      // session-memoized ([[md5TwinMemo]], cold build disclosed) and
+      // session-memoized ([[graft.Memo]], cold build disclosed) and
       // the per-call work is bands + candidate join + hamming
       // confirm. Oracle unchanged; LlmSpec pins restructured ≡
       // monolithic.
       (s, d) => {
         Tables.documents(s, d).select("doc_id", "text")
           .createOrReplaceTempView("graft_shmd5_docs")
-        md5TwinMemo(s, d, "shfp", "graft_shmd5_fp")(s.sql(simhashFpSparkSql))
+        Memo.relation(s, "shfp", d)(s.sql(simhashFpSparkSql))
+          .createOrReplaceTempView("graft_shmd5_fp")
         s.sql(simhashMd5QuerySparkSql)
       },
       Some(simHashMd5Sql(sparkSide = false))),
@@ -3805,9 +3632,7 @@ object LlmOps extends OpModule {
       // session-memoized like every fixed-point rank (cold discloses
       // the winnow + chain build).
       (s, d) => {
-        val key =
-          s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|wrankfx|$d"
-        val scores = key.intern.synchronized(wrankCache.getOrElseUpdate(key, {
+        val scores = Memo.iterative(s, "wrankfx", d) {
           // r22: edge layer reads the session winnow index — the cold
           // build no longer re-runs the kernel + fp exchange that
           // llm_winnow_pairs already paid for
@@ -3823,11 +3648,8 @@ object LlmOps extends OpModule {
             .persist()
           edges.count()
           edges.createOrReplaceTempView("graft_wr_edges")
-          val r = s.sql(boilerRankFixedSql(sparkSide = true)).persist()
-          r.count()
-          edges.unpersist(blocking = false)
-          r
-        }))
+          (s.sql(boilerRankFixedSql(sparkSide = true)), Seq(edges))
+        }
         scores.orderBy(col("pr").desc, col("doc_id").asc)
       },
       Some(boilerRankFixedSql(sparkSide = false))),
@@ -3975,48 +3797,24 @@ object LlmOps extends OpModule {
         val emb = Tables.embeddings(s, d)
         val base = emb.filter(col("vec_id") % 5 =!= 0)
         val batch = emb.filter(col("vec_id") % 5 === 0)
-        val baseKey =
-          s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|$d|maint_base_dir"
-        // register the run dir BEFORE any work that can throw (clone,
-        // append): eviction must be able to delete it even if this run
-        // dies between mkdir and the probe
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_ivf_maint").toString
-        ivfRunDirs.add(s"$baseKey|run=$dir")
-        var builtThisRun = false
-        val lock = ivfBaseDirLocks.computeIfAbsent(baseKey, _ => new Object)
-        val baseDir = lock.synchronized {
-          Option(ivfBaseDirCache.get(baseKey)).getOrElse {
-            builtThisRun = true
-            val bd = java.nio.file.Files
-              .createTempDirectory("graft_ivf_base").toString
-            // cacheKey = None: the disk memo IS the cross-run reuse —
-            // a keyed ivfIndex entry here would pin a corpus-scale
-            // assignment in block-manager memory for the session with
-            // exactly one consumer (this write)
-            try writeIvfIndex(ivfIndex(base, nCentroids = 8, cacheKey = None), bd)
-            catch { case e: Throwable =>
-              val it = java.nio.file.Files.walk(java.nio.file.Paths.get(bd))
-              try it.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-                .forEach { p => java.nio.file.Files.deleteIfExists(p); () }
-              finally it.close()
-              throw e
-            }
-            ivfBaseDirCache.put(baseKey, bd)
-            bd
-          }
+        // cacheKey = None: the disk fixture IS the cross-run reuse — a
+        // keyed ivfIndex entry here would pin a corpus-scale assignment
+        // in block-manager memory for the session with exactly one
+        // consumer (this write)
+        val baseDir = Memo.fixture(s, d, "ivf_maint_base") { bd =>
+          writeIvfIndex(ivfIndex(base, nCentroids = 8, cacheKey = None), bd)
         }
         // clone by hardlink (same tmpfs): append writes NEW files and
         // replaces the clone's centroids dir, never mutating a shared
-        // inode in place — the memoized base stays pristine. The
-        // per-run dir registration above keeps a long-lived service's
-        // maintenance cadence from growing /tmp without bound.
+        // inode in place — the memoized base stays pristine. Each run's
+        // dir sits under the session's fixture root, so the session
+        // teardown (Tables.evictFixtures) deletes it and a long-lived
+        // service's maintenance cadence cannot grow /tmp without bound.
+        val runs = new java.io.File(Tables.fixtureRoot(s, d, "ivf_maint_runs"))
+        runs.mkdirs()
+        val dir = java.nio.file.Files
+          .createTempDirectory(runs.toPath, "run").toString
         cloneDirByLink(baseDir, dir)
-        // stderr, not stdout: Bench's stdout is one parsed JSON line.
-        // This line lets a bench capture distinguish "memo missed →
-        // this run paid the base build" from "box slow" (VERDICT r9 #6)
-        Console.err.println(s"graft: llm_ivf_append_probe base-index memo " +
-          s"${if (builtThisRun) "MISS (built this run)" else "HIT"} dir=$baseDir")
         val drift = appendIvfIndex(s, dir, batch)
         val grown = loadIvfIndex(s, dir)
         val probes = emb.filter(col("vec_id") < 10)
@@ -4225,13 +4023,14 @@ object LlmOps extends OpModule {
       // r21: the per-vector Rademacher projection relation (64-row
       // explode ⋈ hyperplanes + 24 DECIMAL sums — the dominant cost)
       // is the LSH signature index; session-memoized like the IVF
-      // index ([[md5TwinMemo]]), per-call work = band-pack + probe
+      // index ([[graft.Memo]]), per-call work = band-pack + probe
       // join + exact rescue. Oracle unchanged; LlmSpec pins
       // restructured ≡ monolithic.
       (s, d) => {
         Tables.embeddings(s, d).select("vec_id", "embedding")
           .createOrReplaceTempView("graft_lshmd5_emb")
-        md5TwinMemo(s, d, "lshp", "graft_lshmd5_proj")(s.sql(lshProjSparkSql))
+        Memo.relation(s, "lshp", d)(s.sql(lshProjSparkSql))
+          .createOrReplaceTempView("graft_lshmd5_proj")
         s.sql(lshMd5QuerySparkSql)
       },
       Some(lshMd5Sql(sparkSide = false))),
@@ -5324,13 +5123,13 @@ object LlmOps extends OpModule {
         // tokenize + the WindowHashes kernel over every document, the
         // dominant per-call cost — is the suffix-index a production
         // ExactSubstr pipeline maintains per corpus snapshot; session-
-        // memoized ([[md5TwinMemoDf]] discipline), REPARTITIONED BY h1
+        // memoized ([[graft.Memo]]), REPARTITIONED BY h1
         // inside the build so both join sides read the index already
         // clustered on the first join key (EnsureRequirements accepts
         // hash(h1)/hash(h1_b) as co-partitioned for the (h1,h2) equi
         // join — no per-call posting exchange). Per-call work = the
         // self-join + island windows + aggregates. Oracle unchanged.
-        val wins = md5TwinMemoDf(s, d, "sswin") {
+        val wins = Memo.relation(s, "sswin", d) {
           val docs = Tables.documents(s, d).select("doc_id", "text")
           val toks = tokens(col("text"))
           val clones = docs.select(

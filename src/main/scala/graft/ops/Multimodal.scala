@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Op, OpModule, Tables}
+import graft.{Memo, Op, OpModule, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -610,15 +610,6 @@ object Multimodal extends OpModule {
     }
   }
 
-  /** Session memo for [[llm_phash_dedup]]'s hash table — see the op's
-    * comment; one entry per (session, corpus), bounded (2 rows ×
-    * 24 B per image). */
-  private val phashCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  private val binFixtureWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Session-memoized directory of real PNG FILES (first `n` corpus
     * docs rendered via [[imageBytes]], one `doc_<id>.png` each) — the
     * raw-file landing zone a media pipeline actually ingests from,
@@ -628,25 +619,17 @@ object Multimodal extends OpModule {
     */
   private[graft] def pngFixtureDir(s: org.apache.spark.sql.SparkSession,
       d: String, n: Int = 64): String = {
-    val root = Tables.fixtureRoot(s, d, "scan_binaryfile")
-    root.intern.synchronized {
-      if (!binFixtureWritten.contains(root) ||
-          !new java.io.File(root).exists()) {
-        import s.implicits._
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .filter(col("doc_id") < n).as[(Long, String)].collect()
-        val dir = new java.io.File(root)
-        dir.mkdirs()
-        docs.foreach { case (id, text) =>
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(root, s"doc_$id.png"),
-            imageBytes(text, 4, 4, "png"))
-        }
-        binFixtureWritten.add(root)
-        ()
+    Memo.fixture(s, d, "scan_binaryfile") { root =>
+      import s.implicits._
+      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+        .filter(col("doc_id") < n).as[(Long, String)].collect()
+      new java.io.File(root).mkdirs()
+      docs.foreach { case (id, text) =>
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(root, s"doc_$id.png"),
+          imageBytes(text, 4, 4, "png"))
       }
     }
-    root
   }
 
   override def ops: Seq[Op] = Seq(
@@ -793,8 +776,8 @@ object Multimodal extends OpModule {
     // robustness + self-pair recall + inter-image separation.
     Op("llm_phash_dedup",
       (s, d) => {
-        // session-scoped memo of the (uid, doc_id, enc, phash) table
-        // — the ccCache/ivfIndex cacheKey pattern: the hash table is
+        // session-scoped memo ([[graft.Memo]]) of the (uid, doc_id,
+        // enc, phash) table: the hash table is
         // a pure function of (session, corpus), an image service
         // re-reads it on every dedup query, and it is TINY (2 rows ×
         // 24 B per image — the banded index is smaller than the
@@ -813,34 +796,28 @@ object Multimodal extends OpModule {
         // 84-per-image band rows — they reconstruct from uid
         // (uid = doc_id·2 + jpg, a bijection), per §2.3's
         // keys-not-payloads rule.
-        val key =
-          s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|phash|$d"
-        val banded = key.intern.synchronized(
-          phashCache.getOrElseUpdate(key, {
-            val docs = Tables.documents(s, d)
-            // the png and jpg codec branches are INDEPENDENT stages
-            // the scheduler runs concurrently (a fused one-pass
-            // flatMap variant measured ~30% slower at sf0.1 — it
-            // serializes the codec work one stage deep)
-            val png = perceptualHashes(packBlockImages(docs, fmt = "png"))
-              .toDF()
-              .select(col("doc_id"), col("phash"), lit("png").as("enc"))
-            val jpg = perceptualHashes(packBlockImages(docs, fmt = "jpg"))
-              .toDF()
-              .select(col("doc_id"), col("phash"), lit("jpg").as("enc"))
-            val bd = png.unionByName(jpg)
-              .withColumn("uid",
-                col("doc_id") * 2 +
-                  when(col("enc") === "jpg", 1).otherwise(0))
-              .select(col("uid"), col("phash"),
-                posexplode(array(LlmOps.mankuBandVals(col("phash"), 6): _*)))
-              .withColumnRenamed("pos", "band_id")
-              .withColumnRenamed("col", "band_val")
-              .repartition(col("band_id"), col("band_val"))
-              .persist()
-            bd.count()
-            bd
-          }))
+        val banded = Memo.relation(s, "phash", d) {
+          val docs = Tables.documents(s, d)
+          // the png and jpg codec branches are INDEPENDENT stages
+          // the scheduler runs concurrently (a fused one-pass
+          // flatMap variant measured ~30% slower at sf0.1 — it
+          // serializes the codec work one stage deep)
+          val png = perceptualHashes(packBlockImages(docs, fmt = "png"))
+            .toDF()
+            .select(col("doc_id"), col("phash"), lit("png").as("enc"))
+          val jpg = perceptualHashes(packBlockImages(docs, fmt = "jpg"))
+            .toDF()
+            .select(col("doc_id"), col("phash"), lit("jpg").as("enc"))
+          png.unionByName(jpg)
+            .withColumn("uid",
+              col("doc_id") * 2 +
+                when(col("enc") === "jpg", 1).otherwise(0))
+            .select(col("uid"), col("phash"),
+              posexplode(array(LlmOps.mankuBandVals(col("phash"), 6): _*)))
+            .withColumnRenamed("pos", "band_id")
+            .withColumnRenamed("col", "band_val")
+            .repartition(col("band_id"), col("band_val"))
+        }
         val a = banded.as("a")
         val b = banded.as("b")
         a.join(b,

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Op, OpModule, Tables}
+import graft.{Memo, Op, OpModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -265,21 +265,11 @@ object PqOps extends OpModule {
   private def rotateCol(e: Column, rot: Seq[Seq[Double]]): Column =
     transform(typedLit(rot), r => call_function("graft_dot", r, e))
 
-  private val pqCache =
-    scala.collection.concurrent.TrieMap[String, PqCodebook]()
-
-  private val rotCache =
-    scala.collection.concurrent.TrieMap[String, Option[Seq[Seq[Double]]]]()
-
-  /** Evict this session's cached codebooks — companion to
-    * [[LlmOps.evictIvfCache]] for a long-lived embedding service.
-    * (Codebooks are plain driver objects, so eviction is just map
-    * removal — no block-manager state to unpersist.) */
-  def evictPqCache(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix = s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|"
-    pqCache.keys.filter(_.startsWith(prefix)).foreach(pqCache.remove)
-    rotCache.keys.filter(_.startsWith(prefix)).foreach(rotCache.remove)
-  }
+  /** The learned OPQ rotation for one corpus, memoized per
+    * (session, corpus) like the codebooks. */
+  private def opqRotation(s: org.apache.spark.sql.SparkSession,
+      d: String): Option[Seq[Seq[Double]]] =
+    Memo.value(s, "opqrot", d)(opqLearnRotation(Tables.embeddings(s, d)))
 
   /** One seeded-Lloyd step per subspace (seeds = first k vec_ids, the
     * [[LlmOps.lloydCentroids]] convention; empty clusters keep their
@@ -342,9 +332,8 @@ object PqOps extends OpModule {
       PqCodebook(m, dSub, books, rot)
     }
     cacheKey match {
-      case Some(kk) =>
-        val key = s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(emb.sparkSession)}|$kk|m$m|k$k|r${rot.map(_.hashCode).getOrElse(0)}"
-        pqCache.getOrElseUpdate(key, build())
+      case Some(kk) => Memo.value(emb.sparkSession,
+        s"pq|m$m|k$k|r${rot.map(_.hashCode).getOrElse(0)}", kk)(build())
       case None => build()
     }
   }
@@ -483,8 +472,7 @@ object PqOps extends OpModule {
       // isotropic fixture), so it can never do worse than plain PQ
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val key = s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|$d"
-        val rot = rotCache.getOrElseUpdate(key, opqLearnRotation(emb))
+        val rot = opqRotation(s, d)
         simSearchIvfPq(emb, nProbes = 50, topK = 10, cacheKey = Some(d),
           rot = rot)
           .orderBy("p_id", "rank")
@@ -506,8 +494,7 @@ object PqOps extends OpModule {
       // driver's DuckDB hash gate.
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val key = s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|$d"
-        val rot = rotCache.getOrElseUpdate(key, opqLearnRotation(emb))
+        val rot = opqRotation(s, d)
         simSearchIvfPq(emb, nProbes = 5, topK = 10, nCentroids = 8,
           nProbe = 8, rerank = Int.MaxValue, cacheKey = Some(d), rot = rot)
           .orderBy("p_id", "rank")
@@ -545,8 +532,7 @@ object PqOps extends OpModule {
       // orthonormality tests
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val key = s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|$d"
-        val rot = rotCache.getOrElseUpdate(key, opqLearnRotation(emb))
+        val rot = opqRotation(s, d)
         val cb = pqTrain(emb, cacheKey = Some(d), rot = rot)
         pqEncode(emb, cb)
           .select(col("vec_id"), col("packed"), col("cos_err"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Op, OpModule, Tables}
+import graft.{Memo, Op, OpModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** Scans, projections, filters, casts, null handling, sort/limit and
@@ -58,25 +58,6 @@ object Relational extends OpModule {
     f
   }
 
-  /** Session-scoped roots whose hive-partitioned events fixture has
-    * been written — memoized only AFTER a successful write (the
-    * layout_compact pattern: a failed write must retry, never feed
-    * the scan a partial layout); misses re-verify the dir on disk. */
-  private val partFixtureWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Same memo discipline for the schema-evolution fixture. */
-  private val evolveFixtureWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Same memo discipline for the ORC fixture. */
-  private val orcFixtureWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Same memo discipline for the JDBC (embedded Derby) fixture. */
-  private val jdbcFixtureWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   override def ops: Seq[Op] = Seq(
     // ── §2.1 scans ────────────────────────────────────────────────
     Op("scan_parquet",
@@ -111,17 +92,11 @@ object Relational extends OpModule {
       // data filters. The oracle reads the ORIGINAL events table:
       // same rows by construction.
       (s, d) => {
-        val root = Tables.fixtureRoot(s, d, "scan_partitioned")
-        root.intern.synchronized {
-          if (!partFixtureWritten.contains(root) ||
-              !new java.io.File(root).exists()) {
-            Tables.events(s, d)
-              .select("event_id", "user_id", "value", "event_type")
-              .write.partitionBy("event_type")
-              .mode("overwrite").parquet(root)
-            partFixtureWritten.add(root)
-            ()
-          }
+        val root = Memo.fixture(s, d, "scan_partitioned") { r =>
+          Tables.events(s, d)
+            .select("event_id", "user_id", "value", "event_type")
+            .write.partitionBy("event_type")
+            .mode("overwrite").parquet(r)
         }
         s.read.parquet(root)
           .filter(col("event_type") === "purchase")
@@ -145,20 +120,14 @@ object Relational extends OpModule {
       // DISCOVERY path. Oracle reconstructs the same relation from
       // the original table (v1 rows get NULL region by construction).
       (s, d) => {
-        val root = Tables.fixtureRoot(s, d, "scan_evolve")
-        root.intern.synchronized {
-          if (!evolveFixtureWritten.contains(root) ||
-              !new java.io.File(root).exists()) {
-            val n = Tables.nation(s, d)
-            n.filter(col("n_nationkey") < 13)
-              .select("n_nationkey", "n_name")
-              .write.mode("overwrite").parquet(s"$root/v1")
-            n.filter(col("n_nationkey") >= 13)
-              .select("n_nationkey", "n_name", "n_regionkey")
-              .write.mode("overwrite").parquet(s"$root/v2")
-            evolveFixtureWritten.add(root)
-            ()
-          }
+        val root = Memo.fixture(s, d, "scan_evolve") { r =>
+          val n = Tables.nation(s, d)
+          n.filter(col("n_nationkey") < 13)
+            .select("n_nationkey", "n_name")
+            .write.mode("overwrite").parquet(s"$r/v1")
+          n.filter(col("n_nationkey") >= 13)
+            .select("n_nationkey", "n_name", "n_regionkey")
+            .write.mode("overwrite").parquet(s"$r/v2")
         }
         s.read.option("mergeSchema", "true")
           .parquet(s"$root/v1", s"$root/v2")
@@ -428,16 +397,10 @@ object Relational extends OpModule {
       // events: same rows by construction, so the hash gate proves
       // the ORC round-trip is value-exact (incl. the double column).
       (s, d) => {
-        val root = Tables.fixtureRoot(s, d, "scan_orc")
-        root.intern.synchronized {
-          if (!orcFixtureWritten.contains(root) ||
-              !new java.io.File(root).exists()) {
-            Tables.events(s, d)
-              .select("event_id", "user_id", "value", "event_type")
-              .write.mode("overwrite").orc(root)
-            orcFixtureWritten.add(root)
-            ()
-          }
+        val root = Memo.fixture(s, d, "scan_orc") { r =>
+          Tables.events(s, d)
+            .select("event_id", "user_id", "value", "event_type")
+            .write.mode("overwrite").orc(r)
         }
         s.read
           .schema("event_id BIGINT, user_id BIGINT, value DOUBLE, event_type STRING")
@@ -467,27 +430,22 @@ object Relational extends OpModule {
       // value-exact, doubles included; Derby uppercases identifiers,
       // so the projection restores the oracle's lowercase names.
       (s, d) => {
-        val root = Tables.fixtureRoot(s, d, "scan_jdbc")
-        val url = s"jdbc:derby:$root/db;create=true"
+        def url(root: String) = s"jdbc:derby:$root/db;create=true"
         val props = new java.util.Properties()
         props.put("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-        root.intern.synchronized {
-          if (!jdbcFixtureWritten.contains(root) ||
-              !new java.io.File(s"$root/db").exists()) {
-            Tables.customer(s, d)
-              .select("c_custkey", "c_name", "c_nationkey", "c_acctbal")
-              .write.mode("overwrite")
-              .option("createTableColumnTypes",
-                "c_name VARCHAR(64)")
-              .jdbc(url, "CUSTOMER", props)
-            jdbcFixtureWritten.add(root)
-            ()
-          }
+        val root = Memo.fixture(s, d, "scan_jdbc",
+            present = r => new java.io.File(s"$r/db").exists()) { r =>
+          Tables.customer(s, d)
+            .select("c_custkey", "c_name", "c_nationkey", "c_acctbal")
+            .write.mode("overwrite")
+            .option("createTableColumnTypes",
+              "c_name VARCHAR(64)")
+            .jdbc(url(r), "CUSTOMER", props)
         }
         val bounds = Tables.customer(s, d)
           .agg(min("c_custkey"), max("c_custkey")).head()
         s.read.format("jdbc")
-          .option("url", url)
+          .option("url", url(root))
           .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
           .option("dbtable", "CUSTOMER")
           .option("partitionColumn", "C_CUSTKEY")

@@ -36,35 +36,6 @@ object Bridge {
   def sessionUUID(spark: SparkSession): String =
     spark.asInstanceOf[classic.SparkSession].sessionUUID
 
-  /** `df` with every CTE inlined into a plain operator tree. A temp
-    * view registered from a `WITH`-clause DataFrame stores a WithCTE
-    * plan whose CTERelationDef ids are RENUMBERED relative to the
-    * consumer query during plan normalization (an embedded fragment's
-    * defs shift behind any outer defs), so CacheManager's fragment
-    * walk can never match it against the standalone cache key — a
-    * persisted `WITH` build is silently rebuilt inside every
-    * consumer. Inlining before persist+register removes the WithCTE
-    * wrapper entirely, making the view fragment the same plain tree
-    * the cache is keyed on (the form CTE-free builds get for free). */
-  def inlineCtes(df: DataFrame): DataFrame =
-    ofRows(df.sparkSession,
-      org.apache.spark.sql.catalyst.optimizer.InlineCTE(alwaysInline = true)
-        .apply(df.queryExecution.analyzed))
-
-  /** Whether CacheManager would serve `df` from a cached relation —
-    * the memo-engagement probe (`private[sql]` in Spark 4). */
-  def isCached(df: DataFrame): Boolean = {
-    val ds = df.asInstanceOf[classic.Dataset[_]]
-    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds).isDefined
-  }
-
-  /** The analyzed plan AFTER CacheManager substitution — where a
-    * memoized view either becomes InMemoryRelation or silently
-    * doesn't (`withCachedData` is `private[sql]`-adjacent detail the
-    * diag tooling needs). */
-  def withCachedData(df: DataFrame): LogicalPlan =
-    df.queryExecution.withCachedData
-
   /** Re-wrap a DataFrame's rows as a flat LogicalRDD leaf WITHOUT the
     * InternalRow → Row → InternalRow round-trip that
     * `createDataFrame(df.rdd, df.schema)` pays: `toRdd` hands back the

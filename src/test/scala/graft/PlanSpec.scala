@@ -258,21 +258,63 @@ class PlanSpec extends SparkSpec {
     assert("windowspecdefinition".r.findAllIn(pf).size >= 1, pf)
   }
 
+  test("memo engagement: no registered query's second call persists anything; every memo consumer's second call scans an InMemoryRelation") {
+    // the whole registry at sf0.001, each query constructed twice in a
+    // fresh session and never executed: the first call builds every
+    // memo the query uses (its session's keys are its own), so the
+    // second call must find them all. A broken key recipe shows as new
+    // persisted RDDs on the second call; a memo the consumer plan never
+    // matches (the r21 WITH-clause class) shows as a relation memo
+    // with no InMemoryRelation in the consumer's cache-substituted plan
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val sc = spark.sparkContext
+    val consumers = SparkEntry.all.flatMap { op =>
+      val qs = spark.newSession()
+      try {
+        op.fn(qs, sf001)
+        val persisted = sc.getPersistentRDDs.size
+        val again = op.fn(qs, sf001)
+        assert(sc.getPersistentRDDs.size == persisted,
+          s"${op.key}: the second call persisted " +
+            s"${sc.getPersistentRDDs.size - persisted} new RDD(s)")
+        if (Memo.relations(qs).isEmpty) None
+        else {
+          val scans = again.queryExecution.withCachedData
+            .collectWithSubqueries { case r: InMemoryRelation => r }
+          assert(scans.nonEmpty,
+            s"${op.key} memoizes a relation but its second call scans no " +
+              s"InMemoryRelation:\n${again.queryExecution.withCachedData}")
+          Some(op.key)
+        }
+      } finally Memo.evict(qs)
+    }
+    // the memo consumers the registry had when this pin was written
+    assert(consumers.size >= 61, s"only ${consumers.size} memo consumers: $consumers")
+    assert(consumers.contains("graph_kcore"))
+  }
+
   test("r8: dedup self-joins reuse ONE signature stage (ReusedExchange pinned)") {
     // the signature materialization point (repartition(doc_id) after
     // the text kernel) is what keeps every self-join branch from
     // recomputing scan→kernel — r8's 2-3× wins on jaccard/simhash/
     // near ride on this plan property, so pin it: the FINAL adaptive
-    // plan must share the signature relation across branches, either
-    // as a ReusedExchange of the doc_id repartition or (r22, jaccard)
-    // as the session-memoized InMemoryRelation every branch scans
-    for (q <- Seq("llm_dedup_jaccard", "llm_dedup_simhash", "llm_dedup_near")) {
+    // plan must share the signature relation across branches. simhash
+    // and near share it as a ReusedExchange of the doc_id
+    // repartition; jaccard (r22) as the session-memoized
+    // InMemoryRelation every branch scans — and only jaccard may, so
+    // an unrelated cached relation can never mask lost exchange reuse
+    for (q <- Seq("llm_dedup_simhash", "llm_dedup_near")) {
       val p = planOf(q)
-      assert(p.contains("ReusedExchange") || p.contains("InMemoryRelation"),
-        s"$q no longer shares the signature stage across branches:\n$p")
+      assert(p.contains("ReusedExchange"),
+        s"$q no longer reuses the signature exchange across branches:\n$p")
       assert(p.contains("REPARTITION_BY_COL"),
         s"$q lost the signature materialization point:\n$p")
     }
+    val pj = planOf("llm_dedup_jaccard")
+    assert(pj.contains("InMemoryRelation"),
+      s"llm_dedup_jaccard no longer scans its memoized signature base:\n$pj")
+    assert(pj.contains("REPARTITION_BY_COL"),
+      s"llm_dedup_jaccard lost the signature materialization point:\n$pj")
   }
 
   test("r10 reshape/extrema/moments: map-side combine and narrow plans pinned") {
@@ -705,7 +747,7 @@ class PlanSpec extends SparkSpec {
     assert(pr >= 1, s"no edge-relation scans matched — pattern drift?\n$p")
     assert(pr <= 10, s"graph_pagerank_fixed edge-scan count $pr > 10 — " +
       "chain no longer linear (duplicated-tree regression)")
-    ops.GraphOps.evictPrCache(spark)
+    Memo.evict(spark)
   }
 
   test("fk orphans: existence joins with broadcast parents, no cartesian") {
@@ -794,6 +836,6 @@ class PlanSpec extends SparkSpec {
     val opPlan = planOf("graph_hits_fixed")
     assert(!opPlan.contains("Window"),
       s"graph_hits_fixed op plan contains a Window:\n$opPlan")
-    ops.GraphOps.evictPrCache(spark)
+    Memo.evict(spark)
   }
 }
