@@ -16,7 +16,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Pipelines (the meepo surface, heaviest first):
   *  - `fanout_routed`   — envelope → 4 subscribed consumers
   *    (op-sliced ParquetDirSinks) through [[EventStreams.fanOutRouted]]:
-  *    the broadcast core; persist-once, N sink writes per batch.
+  *    the broadcast core; each batch is coalesced to its size,
+  *    persisted once, and its N sink writes run at the same time.
   *  - `cdc_envelope`    — [[EventStreams.cdcEnvelopeStream]]: per-key
   *    ValueState carrying before-images (the binlog-consumer shape).
   *  - `session_timer`   — [[graft.streaming.StatefulProcessors
@@ -136,7 +137,7 @@ object StreamSoak {
             // 4 subscribed consumers over the envelope feed: the I/D
             // slices, a projected U slice, and a full-feed archive —
             // the meepo routing surface; each batch persists once and
-            // writes 4 sinks from the cached copy
+            // writes 4 sinks from the cached copy at the same time
             val sinkDirs = (0 until 4).map(i => freshDir(s"fan_${k}_$i"))
             run("fanout", nEvents, ckpt => {
               val env = EventStreams.envelope(eventStream(dir, Some(8)))

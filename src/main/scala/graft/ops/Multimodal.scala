@@ -795,7 +795,9 @@ object Multimodal extends OpModule {
         // cached relation; guide §2.4). doc_id/enc no longer ride the
         // 84-per-image band rows — they reconstruct from uid
         // (uid = doc_id·2 + jpg, a bijection), per §2.3's
-        // keys-not-payloads rule.
+        // keys-not-payloads rule. The inverse uses pmod and exact
+        // division: DIV and % truncate toward zero, which would map a
+        // negative uid to the wrong doc_id and encoding.
         val banded = Memo.relation(s, "phash", d) {
           val docs = Tables.documents(s, d)
           // the png and jpg codec branches are INDEPENDENT stages
@@ -825,10 +827,10 @@ object Multimodal extends OpModule {
               col("a.band_val") === col("b.band_val") &&
               col("a.uid") < col("b.uid"))
           .select(
-            expr("a.uid DIV 2").as("doc_a"),
-            when(col("a.uid") % 2 === 1, "jpg").otherwise("png").as("enc_a"),
-            expr("b.uid DIV 2").as("doc_b"),
-            when(col("b.uid") % 2 === 1, "jpg").otherwise("png").as("enc_b"),
+            expr("(a.uid - pmod(a.uid, 2)) DIV 2").as("doc_a"),
+            when(pmod(col("a.uid"), lit(2)) === 1, "jpg").otherwise("png").as("enc_a"),
+            expr("(b.uid - pmod(b.uid, 2)) DIV 2").as("doc_b"),
+            when(pmod(col("b.uid"), lit(2)) === 1, "jpg").otherwise("png").as("enc_b"),
             bit_count(col("a.phash").bitwiseXOR(col("b.phash")))
               .as("hamming"))
           .filter(col("hamming") <= 6)

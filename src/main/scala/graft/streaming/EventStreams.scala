@@ -1358,24 +1358,22 @@ object EventStreams {
       .withColumn("converted", col("n_purchases") > 0)
 
   // ── op 65: broadcast fan-out (one stream → N sinks) ─────────────
-  /** meepo's core "broadcasting": each micro-batch is persisted once
-    * and every [[Sink]] writes from the cached copy — one source scan
+  /** meepo's core "broadcasting": each micro-batch is coalesced to its
+    * size ([[FanOut.sizedToBatch]]) and persisted once, and every
+    * [[Sink]] writes from the cached copy at the same time — one source scan
     * regardless of sink count. Delivery to each sink is at-least-once
-    * (a crash mid-fan-out redelivers the batch on restart), and the
-    * [[Sink]] contract makes that effectively-once: every impl is
-    * idempotent per batchId (SinkContractSpec).
+    * (a crash or a failed sibling write redelivers the batch on
+    * restart), and the [[Sink]] contract makes that effectively-once:
+    * every impl is idempotent per batchId (SinkContractSpec). Sink
+    * names must be distinct.
     */
   def fanOutTo(events: DataFrame, sinks: Seq[Sink],
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.persist()
-        try sinks.foreach(_.write(batch.toDF(), batchId))
-        finally batch.unpersist()
-        ()
-      }
-      .start()
+      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+    FanOut.requireDistinct(sinks)
+    FanOut.start(events, checkpointDir) { (batch, batchId) =>
+      FanOut.concurrently(sinks.map(s => () => s.write(batch, batchId)))
+    }
+  }
 
   /** Directory convenience: one [[ParquetDirSink]] per path. */
   def fanOut(events: DataFrame, sinkDirs: Seq[String],
@@ -1399,24 +1397,24 @@ object EventStreams {
     * (at-least-once per (sink, batchId); every bundled sink
     * idempotent), and a route whose predicate matches nothing still
     * writes the empty batch, so batchId bookkeeping stays dense.
+    * Each route names a different sink.
     *
     * 100 TB note: the slice transforms run distributed on the cached
-    * batch (Catalyst prunes columns per route); the driver only
-    * sequences the writes, exactly like [[fanOutTo]].
+    * batch (Catalyst prunes columns per route), and the routes' writes
+    * run at the same time, exactly like [[fanOutTo]]; the batch is
+    * coalesced only when its size estimate is below one file's open
+    * cost per partition, which a large batch never is.
     */
   def fanOutRouted(events: DataFrame, routes: Seq[Route],
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.persist()
-        try routes.foreach { r =>
-          val sliced = batch.toDF().filter(r.where)
-          val projected =
-            if (r.columns.isEmpty) sliced else sliced.select(r.columns.map(col): _*)
-          r.sink.write(projected, batchId)
-        } finally batch.unpersist()
-        ()
-      }
-      .start()
+      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+    FanOut.requireDistinct(routes.map(_.sink))
+    FanOut.start(events, checkpointDir) { (batch, batchId) =>
+      FanOut.concurrently(routes.map { r => () =>
+        val sliced = batch.filter(r.where)
+        val projected =
+          if (r.columns.isEmpty) sliced else sliced.select(r.columns.map(col): _*)
+        r.sink.write(projected, batchId)
+      })
+    }
+  }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import scala.jdk.CollectionConverters._
 
 /** Operational metrics surface (VERDICT r19 missing #5): meepo-family
   * middleware ships position-lag/throughput metrics and an admin view;
@@ -23,11 +24,16 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 object StreamMetrics {
 
   /** One micro-batch's operational row. Timestamps in exact integer
-    * µs (the repo's convention — no raw timestamp outputs). */
+    * µs (the repo's convention — no raw timestamp outputs).
+    * `duration_ms` is the engine's own phase split of the trigger
+    * (`progress.durationMs`: latestOffset, getBatch, queryPlanning,
+    * addBatch, walCommit, commitOffsets, triggerExecution, …), so a
+    * slow trigger names the layer it spent its time in. */
   case class BatchMetric(query_name: String, run_id: String, batch_id: Long,
       wall_ts_us: Long, num_input_rows: Long, input_rows_per_sec: Double,
       processed_rows_per_sec: Double, trigger_ms: Long, watermark_us: Long,
-      state_rows: Long, state_mem_bytes: Long, sink_rows: Long)
+      state_rows: Long, state_mem_bytes: Long, sink_rows: Long,
+      duration_ms: Map[String, Long])
 
   private def isoToUs(iso: String): Long =
     try java.time.Instant.parse(iso).toEpochMilli * 1000L
@@ -63,7 +69,8 @@ object StreamMetrics {
         Option(p.durationMs.get("triggerExecution")).map(_.longValue)
           .getOrElse(0L),
         wm, stateRows, stateBytes,
-        math.max(p.sink.numOutputRows, 0L)))
+        math.max(p.sink.numOutputRows, 0L),
+        p.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap))
       n.incrementAndGet()
       while (n.get() > keep) {
         if (buf.pollFirst() != null) n.decrementAndGet()

@@ -15,6 +15,12 @@ import org.apache.spark.sql.{DataFrame, Row}
   * bundled implementation; a new sink earns its place by passing the
   * same contract test.
   *
+  * Concurrency contract: within one fan-out, different sinks' `write`s
+  * (and [[StagedSink.stage]]s) for one batch may run at the same time,
+  * each on its own thread; one sink is never called twice at once,
+  * because a fan-out rejects two entries with the same `name`. A sink
+  * that shares state with another sink must guard that state itself.
+  *
   * 100 TB notes: `write` runs on the driver but must only issue
   * distributed actions (df.write…) — never collect the batch. The one
   * exception, [[MemorySink]], is a test double and says so.
@@ -268,14 +274,18 @@ class ParquetStagedSink(root: String) extends StagedSink {
 class TwoPhaseFanOut(logDir: String, sinks: Seq[StagedSink])
     extends Serializable {
   require(sinks.nonEmpty, "two-phase fan-out needs at least one sink")
+  FanOut.requireDistinct(sinks)
   private def marker(b: Long) = new java.io.File(s"$logDir/commit_$b")
 
   /** Has the global commit decision for this batch been recorded? */
   def committed(batchId: Long): Boolean = marker(batchId).exists()
 
-  /** Phase 1: stage everywhere (idempotent). */
+  /** Phase 1: stage everywhere at the same time (idempotent). Returns or
+    * throws only after every sink's stage has returned, so a failed
+    * stage never races the decision: no marker is written for the batch,
+    * and redelivery re-runs the round (presumed abort). */
   def stageAll(batch: DataFrame, batchId: Long): Unit =
-    sinks.foreach(_.stage(batch, batchId))
+    FanOut.concurrently(sinks.map(s => () => s.stage(batch, batchId)))
 
   /** Phase 2a: record the atomic global commit decision. */
   def decide(batchId: Long): Unit = {
@@ -324,19 +334,11 @@ class TwoPhaseFanOut(logDir: String, sinks: Seq[StagedSink])
     else { sink.commitStaged(batchId); sink.readCommitted(spark, batchId) }
 
   /** Streaming composition: the [[EventStreams.fanOutTo]] shape with
-    * the 2PC round as the per-batch body. */
+    * the 2PC round as the per-batch body. The stages run at the same
+    * time; `decide` and `commitAll` stay serial, after every stage. */
   def attach(events: DataFrame,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-          batch.persist()
-          try fanOut(batch.toDF(), batchId)
-          finally batch.unpersist()
-          ()
-      }
-      .start()
+    FanOut.start(events, checkpointDir)(fanOut)
 }
 
 /** The Kafka shape (compile-checked; the kafka connector jar and any

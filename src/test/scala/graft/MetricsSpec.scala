@@ -118,5 +118,16 @@ class MetricsSpec extends SparkSpec {
     assert(m.map(_.getAs[Long]("state_rows")).toSeq == Seq(5L, 5L))
     // processed throughput is a positive rate once a batch has run
     assert(m.forall(_.getAs[Double]("processed_rows_per_sec") > 0.0))
+    // the trigger's phase split, as the engine reports it: every data
+    // batch runs all six phases, and adding the batch is part of the
+    // trigger
+    val phases = Seq("latestOffset", "walCommit", "getBatch", "queryPlanning",
+      "addBatch", "commitOffsets")
+    m.foreach { r =>
+      val d = r.getAs[scala.collection.Map[String, Long]]("duration_ms")
+      assert(phases.forall(d.contains), s"phases missing from $d")
+      assert(d("addBatch") <= d("triggerExecution"), s"addBatch > trigger in $d")
+      assert(d("triggerExecution") == r.getAs[Long]("trigger_ms"))
+    }
   }
 }

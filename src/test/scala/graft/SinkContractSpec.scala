@@ -1,8 +1,15 @@
 package graft
 
-import graft.streaming.{EventStreams, JdbcUpsertSink, MemorySink, ParquetDirSink, Sink}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+
+import graft.streaming.{EventStreams, FanOut, JdbcUpsertSink, MemorySink, ParquetDirSink,
+  ParquetStagedSink, Sink, StagedSink, TwoPhaseFanOut}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 /** The Sink delivery contract (SURVEY §2.9 ops 5-7 / VERDICT r3 #7):
   * foreachBatch delivers each micro-batch AT LEAST once per sink, so
@@ -38,6 +45,45 @@ class SinkContractSpec extends SparkSpec {
     Seq(pq -> (() => pqState()), mem -> (() => memState()),
       jdbc -> (() => jdbc.appliedBatches))
   }
+
+  /** The sf0.001 events as `files` parquet files of consecutive ids,
+    * streamed `perTrigger` files a trigger: each micro-batch is tiny
+    * but arrives in one partition per file, the way the file source
+    * splits small files (one file's open cost per partition). */
+  private def splitFeed(dir: String, files: Int, perTrigger: Int): DataFrame = {
+    val feed = s"$dir/feed"
+    Tables.events(spark, sf001).repartitionByRange(files, col("event_id"))
+      .write.parquet(feed)
+    spark.readStream.schema(spark.read.parquet(feed).schema)
+      .option("maxFilesPerTrigger", perTrigger.toString).parquet(feed)
+  }
+
+  /** Runs `before` ahead of the first write only, and `after` once that
+    * first write has returned. */
+  private class FirstCallSink(inner: Sink, before: () => Unit,
+      after: () => Unit = () => ()) extends Sink {
+    private val calls = new AtomicInteger(0)
+    override def name: String = inner.name
+    override def write(batch: DataFrame, batchId: Long): Unit =
+      if (calls.getAndIncrement() > 0) inner.write(batch, batchId)
+      else { before(); inner.write(batch, batchId); after() }
+  }
+
+  /** The [[StagedSink]] shape of [[FirstCallSink]], around `stage`. */
+  private class FirstCallStaged(inner: ParquetStagedSink, before: () => Unit,
+      after: () => Unit = () => ()) extends StagedSink {
+    private val calls = new AtomicInteger(0)
+    override def name: String = inner.name
+    override def stage(batch: DataFrame, batchId: Long): Unit =
+      if (calls.getAndIncrement() > 0) inner.stage(batch, batchId)
+      else { before(); inner.stage(batch, batchId); after() }
+    override def commitStaged(batchId: Long): Unit = inner.commitStaged(batchId)
+    override def abortStaged(batchId: Long): Unit = inner.abortStaged(batchId)
+    override def visibleBatches: Seq[Long] = inner.visibleBatches
+  }
+
+  private def causes(t: Throwable): Seq[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
 
   test("contract: redelivery of the same batchId leaves state unchanged") {
     val dir = tmpDir("graft_sink_contract")
@@ -262,5 +308,168 @@ class SinkContractSpec extends SparkSpec {
       coord.readCommitted(spark, b, b.visibleBatches.head).get.count() ==
       2 * spark.read.parquet(s"$dir/a/committed/batch_${a.visibleBatches.head}")
         .count(), "redelivered decided batch was re-staged")
+  }
+
+  test("fan-out: one failing sink fails the batch only after its sibling " +
+      "writes return; a restart leaves every sink exactly its slice") {
+    val dir = tmpDir("graft_sink_fail")
+    Tables.configure(spark)
+    val boom = new IllegalStateException("planted purchases sink failure")
+    val thrown = new CountDownLatch(1)
+    @volatile var siblingReturned = false
+    val clicks = new MemorySink("clicks")
+    val purchases = new MemorySink("purchases")
+    val others = new MemorySink("others")
+    val routes = Seq(
+      EventStreams.Route(clicks, col("event_type") === "click",
+        columns = Seq("event_id", "user_id")),
+      // fails its first write, after letting the sibling start
+      EventStreams.Route(new FirstCallSink(purchases,
+        () => { thrown.countDown(); throw boom }),
+        col("event_type") === "purchase"),
+      // its first write is still running well after the failure
+      EventStreams.Route(new FirstCallSink(others,
+        () => { assert(thrown.await(30, TimeUnit.SECONDS)); Thread.sleep(500) },
+        () => siblingReturned = true),
+        !col("event_type").isin("click", "purchase")))
+    val stream = splitFeed(dir, files = 4, perTrigger = 2)
+      .select("event_id", "user_id", "event_type", "value")
+    val failed = EventStreams.fanOutRouted(stream, routes, s"$dir/ckpt")
+    val e = intercept[StreamingQueryException](failed.processAllAvailable())
+    assert(siblingReturned, "the batch failed while a sibling write was still running")
+    assert(causes(e).contains(boom), s"query failed with $e, not the sink's error")
+    failed.stop()
+    // restart from the same checkpoint: batch 0 is redelivered whole
+    val q = EventStreams.fanOutRouted(stream, routes, s"$dir/ckpt")
+    q.processAllAvailable()
+    q.stop()
+    val ev = Tables.events(spark, sf001)
+    def slice(where: org.apache.spark.sql.Column, cols: String*) =
+      ev.filter(where).select(cols.map(col): _*).orderBy("event_id").collect().toSeq
+    def got(m: MemorySink) = m.batches.values.flatten.toSeq.sortBy(_.getLong(0))
+    assert(clicks.batches.keySet == Set(0L, 1L))
+    assert(got(clicks) == slice(col("event_type") === "click", "event_id", "user_id"))
+    val full = Seq("event_id", "user_id", "event_type", "value")
+    assert(got(purchases) == slice(col("event_type") === "purchase", full: _*))
+    assert(got(others) == slice(!col("event_type").isin("click", "purchase"), full: _*))
+  }
+
+  test("2pc stageAll: a failing stage throws only after the other stage " +
+      "returns, and no decision is written; recovery then commits whole") {
+    val dir = tmpDir("graft_2pc_stagefail")
+    val boom = new IllegalStateException("planted stage failure")
+    val thrown = new CountDownLatch(1)
+    @volatile var otherReturned = false
+    val a = new ParquetStagedSink(s"$dir/a")
+    val b = new ParquetStagedSink(s"$dir/b")
+    val coord = new TwoPhaseFanOut(s"$dir/log", Seq(
+      new FirstCallStaged(a, () => { thrown.countDown(); throw boom }),
+      new FirstCallStaged(b,
+        () => { assert(thrown.await(30, TimeUnit.SECONDS)); Thread.sleep(500) },
+        () => otherReturned = true)))
+    val batch = batchOf(50)
+    val e = intercept[IllegalStateException](coord.stageAll(batch, 0L))
+    assert(e eq boom)
+    assert(otherReturned, "stageAll threw while the other stage was still running")
+    assert(!coord.committed(0L))
+    assert(Option(new java.io.File(s"$dir/log").list()).forall(_.isEmpty),
+      "a failed stage left a decision marker")
+    assert(a.visibleBatches.isEmpty && b.visibleBatches.isEmpty)
+    coord.recover(Seq(0L))
+    coord.fanOut(batch, 0L)
+    assert(a.visibleBatches == Seq(0L) && b.visibleBatches == Seq(0L))
+    assert(coord.readCommitted(spark, a, 0L).get.count() == 50L)
+    assert(coord.readCommitted(spark, b, 0L).get.count() == 50L)
+  }
+
+  test("fan-out: every sink write runs in the query's job group, so " +
+      "stopping the query cancels it") {
+    val dir = tmpDir("graft_sink_jobgroup")
+    val sc = spark.sparkContext
+    val key = "graft.test.sink"
+    val seen = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach { s =>
+          seen.add(s -> e.properties.getProperty("spark.jobGroup.id")); ()
+        }
+    }
+    /** Tags the jobs of its writes with its name. */
+    class Tagged(inner: Sink) extends Sink {
+      override def name: String = inner.name
+      override def write(batch: DataFrame, batchId: Long): Unit = {
+        sc.setLocalProperty(key, name)
+        try inner.write(batch, batchId) finally sc.setLocalProperty(key, null)
+      }
+    }
+    val sinks = Seq("a", "b", "c").map(n => new Tagged(new ParquetDirSink(s"$dir/$n")))
+    sc.addSparkListener(listener)
+    val q = try {
+      val q = EventStreams.fanOutRouted(
+        splitFeed(dir, files = 4, perTrigger = 2).select("event_id", "event_type"),
+        sinks.zip(Seq(lit(true), col("event_type") === "click", lit(false)))
+          .map { case (s, where) => EventStreams.Route(s, where) },
+        s"$dir/ckpt")
+      q.processAllAvailable()
+      q.stop()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (seen.asScala.map(_._1).toSet != sinks.map(_.name).toSet &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      q
+    } finally sc.removeSparkListener(listener)
+    assert(seen.asScala.map(_._1).toSet == sinks.map(_.name).toSet)
+    assert(seen.asScala.forall(_._2 == q.runId.toString),
+      s"sink jobs outside the query's job group: ${seen.asScala.filter(_._2 != q.runId.toString)}")
+  }
+
+  test("fan-out: two entries for one sink are rejected before the query starts") {
+    val dir = tmpDir("graft_sink_distinct")
+    val stream = splitFeed(dir, files = 2, perTrigger = 1)
+    val twice = Seq(new ParquetDirSink(s"$dir/x"), new ParquetDirSink(s"$dir/x"))
+    intercept[IllegalArgumentException](EventStreams.fanOutTo(stream, twice, s"$dir/c1"))
+    intercept[IllegalArgumentException](EventStreams.fanOutRouted(stream,
+      twice.map(EventStreams.Route(_, lit(true))), s"$dir/c2"))
+    intercept[IllegalArgumentException](new TwoPhaseFanOut(s"$dir/log",
+      Seq(new ParquetStagedSink(s"$dir/y"), new ParquetStagedSink(s"$dir/y"))))
+    assert(spark.streams.active.isEmpty)
+  }
+
+  test("fan-out sizing: a batch coalesces to one partition per open cost " +
+      "of its estimated size, never more than it has") {
+    val tiny = spark.range(0, 100, 1, 8).toDF()
+    assert(FanOut.sizedToBatch(tiny).rdd.getNumPartitions == 1)
+    val big = spark.range(0, 10000000, 1, 8).toDF()
+    assert(big.queryExecution.optimizedPlan.stats.sizeInBytes == BigInt(80000000))
+    val sized = FanOut.sizedToBatch(big)
+    assert(sized eq big)
+    assert(sized.rdd.getNumPartitions == 8)
+  }
+
+  test("fan-out: a tiny micro-batch leaves exactly one data file per sink per batch") {
+    val dir = tmpDir("graft_sink_onefile")
+    val stream = splitFeed(dir, files = 4, perTrigger = 2)
+      .select(col("event_id").as("id"), col("event_type").as("payload"))
+    // precondition: two small files read as a batch arrive in 2 partitions
+    val two = new java.io.File(s"$dir/feed").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted.take(2)
+    assert(spark.read.parquet(two: _*).rdd.getNumPartitions == 2)
+    val routed = Seq("all", "clicks", "none")
+    val rq = EventStreams.fanOutRouted(stream,
+      routed.zip(Seq(lit(true), col("payload") === "click", lit(false))).map {
+        case (n, where) => EventStreams.Route(new ParquetDirSink(s"$dir/routed/$n"), where)
+      }, s"$dir/routed_ckpt")
+    val coord = new TwoPhaseFanOut(s"$dir/log",
+      Seq("a", "b").map(n => new ParquetStagedSink(s"$dir/twopc/$n")))
+    val tq = coord.attach(stream, s"$dir/twopc_ckpt")
+    Seq(rq, tq).foreach { q => q.processAllAvailable(); q.stop() }
+    val batchDirs = routed.map(n => s"$dir/routed/$n") ++
+      Seq("a", "b").map(n => s"$dir/twopc/$n/committed")
+    for (root <- batchDirs; b <- Seq(0L, 1L)) {
+      val files = Option(new java.io.File(s"$root/batch_$b").list()).getOrElse(Array.empty[String])
+        .filter(_.startsWith("part-"))
+      assert(files.length == 1, s"$root/batch_$b holds ${files.length} data files")
+    }
+    assert(spark.read.parquet(s"$dir/routed/all/batch_*").count() ==
+      Tables.events(spark, sf001).count())
   }
 }
